@@ -54,13 +54,9 @@ def build_parser() -> argparse.ArgumentParser:
                    help="--algorithm ppr: drop state entries under this rank after "
                         "each superstep (forward-push-style cap; default exact)")
     p.add_argument("--lpa_frontier", action="store_true",
-                   help="LPA: exact frontier gather + fixpoint early stop "
-                        "(run-toward-convergence shape)")
-    p.add_argument("--lpa_warm_start", action="store_true",
-                   help="LPA: one throwaway 1%%-sampled pilot superstep before "
-                        "superstep 1 so the JIT/codegen session tail is paid at "
-                        "~1%% volume (labels bitwise unchanged; recommended for "
-                        "production-length runs on large caches)")
+                   help="LPA: count the labels each superstep changes and stop "
+                        "at the first superstep that changes none (labels equal "
+                        "the full --lpa_iterations run; prints frontier_sizes)")
     p.add_argument("--scc_chain_contract", action="store_true",
                    help="SCC: collapse in/out-degree-1 chains up front (pointer "
                         "doubling) — the depth lever for path-shaped graphs; "
@@ -111,6 +107,12 @@ def main(argv: list[str] | None = None) -> int:
         print("--filter_ratio is baked into the prepared graph at --prepare time; "
               "re-prepare with the desired ratio instead of passing it at query time",
               file=sys.stderr)
+        return 2
+    if args.prepare and args.algorithm == "lpa" and args.filter_ratio is not None:
+        # the undirected artifact bakes no spam filter: an explicit
+        # --filter_ratio here would silently NOT be applied
+        print("--filter_ratio is not supported by --prepare --algorithm lpa: the undirected "
+              "artifact bakes no spam filter", file=sys.stderr)
         return 2
     if not args.data and not use_prepared:
         print("--data is required (or pass --prepared_dir to run from a prepared graph)",
@@ -199,13 +201,11 @@ def main(argv: list[str] | None = None) -> int:
             res = label_propagation(spark, iterations=args.lpa_iterations,
                                     checkpoint_store=store, frontier=args.lpa_frontier,
                                     prepared_und=load_prepared_undirected(spark, args.prepared_dir),
-                                    num_partitions=args.num_partitions,
-                                    warm_start=args.lpa_warm_start)
+                                    num_partitions=args.num_partitions)
         else:
             res = label_propagation(spark, edges, vertices=vertices,
                                     iterations=args.lpa_iterations, checkpoint_store=store,
-                                    frontier=args.lpa_frontier,
-                                    warm_start=args.lpa_warm_start)
+                                    frontier=args.lpa_frontier)
         out = res.labels
         if args.lpa_frontier:
             print(json.dumps({"iterations": res.iterations,

@@ -1,10 +1,11 @@
 """Engine configuration.
 
-``PageRankConfig`` mirrors the reference CLI surface (pagerank.py:261-285:
---data --personalization_vector_query --search_query --filter_ratio --alpha
---max_iterations --epsilon --max_results --power --sum_weight) plus the
-Spark-side knobs the reference has no concept of (partitioning, salting,
-checkpointing, physical strategy, normalization mode).
+``PageRankConfig`` holds the reference's PageRank knobs (pagerank.py:261-285:
+--alpha --max_iterations --epsilon --filter_ratio) plus the Spark-side knobs
+the reference has no concept of (partitioning, salting, checkpoint cadence,
+physical strategy, normalization mode). The reference's query flags
+(--personalization_vector_query --search_query --max_results --power
+--sum_weight) are CLI arguments passed straight to ``functions.query``.
 
 Normalization modes (SURVEY.md §5.2 — the reference README goldens pin
 *different* semantics than the committed code):
@@ -21,7 +22,7 @@ point does not depend on x0.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 _MODES: dict[str, tuple[str, str]] = {
     "reference": ("l1", "l2"),
@@ -46,12 +47,6 @@ class PageRankConfig:
     max_iterations: int = 1000
     epsilon: float = 1e-6
     filter_ratio: float | None = None
-    max_nnz: int | None = None
-    personalization_query: str | None = None
-    search_query: str = ""
-    max_results: int = 10
-    sum_weight: float = 0.03
-    power: int = 30
     # semantics
     mode: str = "reference"  # reference | l2l2 | standard | l2l1
     convergence: str = "l2_residual"  # l2_residual (reference) | l1_delta (bench)
@@ -62,9 +57,7 @@ class PageRankConfig:
     num_partitions: int | None = None  # None → spark.sql.shuffle.partitions
     salt_buckets: int = 8  # salt replication factor for hub vertices
     hub_degree_threshold: int | None = None  # None → auto (mean*32, min 256)
-    checkpoint_dir: str | None = None  # None → localCheckpoint only
-    checkpoint_every: int = 1  # write state every k iterations when dir set
-    local_checkpoint_every: int = 8  # lineage truncation cadence
+    checkpoint_every: int = 1  # write state every k iterations when a checkpoint_store is passed
 
     @property
     def norm_x(self) -> str:
@@ -73,14 +66,3 @@ class PageRankConfig:
     @property
     def norm_v(self) -> str:
         return mode_norms(self.mode)[1]
-
-
-@dataclass
-class EngineConfig:
-    """Top-level knobs shared by all graph algorithms."""
-
-    num_partitions: int | None = None
-    checkpoint_dir: str | None = None
-    local_checkpoint_every: int = 8
-    max_iterations: int = 100
-    pagerank: PageRankConfig = field(default_factory=PageRankConfig)

@@ -45,6 +45,10 @@ COMMENT = {"python": "#", "js": "//", "java": "//", "go": "//"}
 
 FILES_PER_SF = 1_000_000  # sf0.001 → 1,000 file rows
 
+# generated fixtures are cached under <repo root>/fixtures (git-ignored)
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+FIXTURES_DIR = os.path.join(_REPO_ROOT, "fixtures")
+
 
 def _import_line(lang: str, stem: str, k: int) -> str:
     dotted = stem.replace("/", ".")
@@ -232,7 +236,7 @@ def write_fixture(st: SourceTable, out_dir: str) -> str:
     return out_dir
 
 
-def ensure_fixture(sf: float, base_dir: str = "/root/repo/fixtures", seed: int = 42) -> str:
+def ensure_fixture(sf: float, base_dir: str = FIXTURES_DIR, seed: int = 42) -> str:
     """Generate-and-cache; returns the fixture dir for this sf."""
     out = f"{base_dir}/sf{sf:g}"
     if os.path.exists(f"{out}/source_table/_manifest.json"):

@@ -523,7 +523,6 @@ def connected_components(
     vertices: DataFrame | None = None,
     max_iterations: int = 200,
     num_partitions: int | None = None,
-    local_checkpoint_every: int = 8,  # kept for API compat; truncation is per-iteration
     checkpoint_store=None,
     algorithm: str = "star",  # star (contraction, default) | propagation (fixed-iteration oracle)
     validate_vertices: bool = True,

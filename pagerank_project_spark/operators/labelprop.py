@@ -23,8 +23,7 @@ Physical design (same substrate as PageRank/CC):
   order-preserving cast (labels bitwise unchanged, pinned by test) that
   halves the cache's DRAM stream and every loop shuffle's key bytes; the
   cache stream is the measured late-superstep bandwidth cap at sf16
-  (BENCH/BASELINE.md). Above the limit (or in hash vid_mode) everything
-  stays long.
+  (BENCH/BASELINE.md). Above the limit everything stays long.
 - per superstep: neighbor-label rows ∪ own-label keeper rows (count 0,
   so isolated vertices keep their label and occupied vertices never beat
   a real neighbor count) → groupBy(vid, lbl).sum → argmax via one Window
@@ -45,12 +44,6 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from pagerank_project_spark.operators.vids import string_sorted_vids
 
-# frontier mode only engages its filtered gather when the touched set is
-# small enough to broadcast as a semi-join filter over the edge cache
-# (~8 bytes/vid → 40 MB at the limit); above it the superstep falls back
-# to the full gather, which is the right plan anyway at that frontier size
-FRONTIER_BROADCAST_LIMIT = 5_000_000
-
 
 @dataclass
 class LPAResult:
@@ -58,7 +51,7 @@ class LPAResult:
     iterations: int  # actual final superstep index (resume: includes checkpointed supersteps)
     iter_secs: list[float] | None = None  # wall per superstep
     phase_secs: dict | None = None  # one-time tails: validate/encode/cache_fill
-    frontier_sizes: list[int] | None = None  # frontier mode: |changed| per superstep
+    frontier_sizes: list[int] | None = None  # frontier=True: |changed| per superstep
 
 
 def label_propagation(
@@ -67,111 +60,48 @@ def label_propagation(
     vertices: DataFrame | None = None,
     iterations: int = 10,
     num_partitions: int | None = None,
-    local_checkpoint_every: int = 8,  # kept for API compat
     checkpoint_store=None,
     validate_vertices: bool = True,
     vmap: DataFrame | None = None,
-    vid_mode: str = "sorted",
     frontier: bool = False,
-    frontier_threshold: float = 0.0,
     prepared_und=None,
-    warm_start: bool = False,
 ) -> LPAResult:
     """``prepared_und``: a plans.prepared_graph.PreparedUndirected — the
     prepare-once artifact holding the STRING-SORTED vid map and the baked
     canonical symmetric edge table (bucketed by src, so the per-superstep
     cache persists with ZERO shuffle). Mutually exclusive with ``edges``/
-    ``vmap``/``vid_mode='hash'``; labels are bitwise the direct sorted
-    path's (pinned by test and by the shared SQL oracle). This removes
-    exactly the one-time tails — validate, encode, symmetrize+distinct,
-    cache repartition — that the sf16 scaling analysis measured as the
-    whole-run cap (BENCH/BASELINE.md).
+    ``vmap``; labels are bitwise the direct path's (pinned by test and by
+    the shared SQL oracle). This removes exactly the one-time tails —
+    validate, encode, symmetrize+distinct, cache repartition — that the
+    sf16 scaling analysis measured as the whole-run cap
+    (BENCH/BASELINE.md).
 
     ``vmap``: optional pre-built (id, vid) map from
     ``vids.string_sorted_vids`` over the same vertex universe, so callers
-    running CC + LPA on one graph pay the encode jobs once.
+    running CC + LPA on one graph pay the encode jobs once. Vids are
+    always STRING-sorted: the min-label tie-break is then exactly
+    min-STRING, which the SQL oracle pins. (CC's xxhash64 vids measured
+    ~20% slower LPA supersteps at sf16 — random vids do not
+    delta-compress in the long-lived symmetric cache; BENCH/BASELINE.md
+    round 4.)
 
-    ``vid_mode``: 'sorted' (default) assigns vids in STRING-sorted order —
-    the min-label tie-break is then exactly min-STRING, which the SQL
-    oracle pins. 'hash' assigns vids inline as xxhash64(id)
-    (collision-checked; falls back to sorted) — zero setup shuffles, no
-    encode joins; tie-breaks then use the hash order instead of the
-    string order (still a deterministic, partition/retry-invariant
-    function of the data, but where neighbor-label frequencies TIE the
-    adopted label — and hence the final partition — may differ from
-    sorted mode: both are valid sync-LPA outcomes under different total
-    orders).
-
-    MEASURED TRADE-OFF (sf16, 131M symmetric rows, BENCH/BASELINE.md
-    round 4): unlike CC star (which rewrites its edge set every round),
-    LPA STREAMS one long-lived symmetric edge cache every superstep, and
-    the vid encoding sets that cache's compressibility — compact sorted
-    vids delta-compress while random xxhash64 vids do not, so 'sorted'
-    measured BOTH a cheaper cache fill and ~20% faster supersteps despite
-    its costlier encode. 'sorted' is therefore the default and the
-    production recommendation; 'hash' remains for encode-dominated
-    shapes (few supersteps over a small edge set with a huge vertex
-    dictionary).
-
-    ``frontier``: exact work-reduction for long (run-toward-convergence)
-    runs. A vertex's winner can only change when some neighbor's label
-    changed in the PREVIOUS superstep, so once the per-superstep changed
-    set falls under ``frontier_threshold``·|V| the gather is restricted
-    to touched = N(changed): the edge cache is filtered by a BROADCAST
-    semi-join on touched (a codegen'd hash filter riding the cache scan
-    — the cache itself never re-shuffles), and only Σ indeg(touched)
-    rows enter the freq shuffle + argmax instead of all E — untouched
-    vertices carry their label forward. The result is BITWISE the
-    default path's (pinned by tests): untouched vertices would have
-    recomputed identical freq tables. When a superstep changes nothing
-    the run stops early (every further superstep is provably identity,
-    so the labels still equal the full-K run; ``iterations`` reports the
-    superstep that hit the fixpoint). Costs that remain per superstep:
-    one extra cache stream to build the touched set, and the Θ(V) state
-    carry/checkpoint. Default off: fixed-k oracle runs are short and the
-    changed set only collapses near convergence.
-
-    MEASURED (sf1, 4.1M edges / 1M vertices, local[16], 12 supersteps):
-    labels bitwise equal, but mid-churn engagement is a NET LOSS — the
-    changed set stalled at ~2% (sync LPA keeps churning on this graph)
-    and filtered supersteps ran 7-9 s vs the full path's 1.1 s: two full
-    cache streams (touched build + filtered gather) plus the extra
-    union-repartition state carry and per-superstep count cost more than
-    the E-row gather they avoid at this cache size. Hence the default
-    ``frontier_threshold=0.0``: frontier=True gives ONLY the
-    provably-identity early STOP (skipping whole supersteps once nothing
-    changes) — the filtered gather never engages unless the caller opts
-    in with a positive threshold, because the measured sync-LPA churn
-    stall (~2%) sits exactly in the regime an 0.05 default would engage
-    the 7-9x-slower filtered path.
-
-    ``warm_start``: before superstep 1, execute ONE pilot superstep of
-    the exact loop plan shape (cache scan → shuffle_hash join → union →
-    map-side-combined groupBy → WindowGroupLimit → localCheckpoint) over
-    a 1%-sampled edge slice and discard the result, and eagerly
-    materialize the initial label checkpoint. Superstep 1 otherwise
-    carries a parallelism-INVARIANT session tail — whole-stage-codegen
-    compilation, C2 JIT of the shuffle/cache-decode/window machinery,
-    shuffle-service and connection setup — measured at sf16 as ~27-35 s
-    on BOTH a 1x4 and a 4x4 local-cluster leg (BENCH/BASELINE.md round 5:
-    iter-1 scaled 2.1x while the equally churn-heavy iters 2-3 scaled
-    3.3-4.0x). The pilot buys that tail at ~1% of the volume (the cache
-    scan itself runs full-length but at memory speed), so production
-    superstep 1 starts JIT-warm. Labels are BITWISE unaffected — the
-    pilot's output is discarded and its sampled state is disjoint from
-    the loop's (pytest-pinned). Default off: short fixed-k runs at small
-    scale (the oracle/driver-contract shape) don't amortize the pilot;
-    recommended for production-length runs on large caches."""
+    ``frontier``: exact early stop for run-toward-convergence jobs. Each
+    superstep also joins the new labels to the previous ones and counts
+    the vertices whose label changed (``frontier_sizes``); when a
+    superstep changes nothing the run stops, because every further
+    superstep is provably identity — the labels still equal the full-K
+    run and ``iterations`` reports the superstep that hit the fixpoint.
+    Every superstep still gathers over the whole edge cache (a filtered
+    changed-neighbor gather measured 7-9x slower per superstep at sf1,
+    BENCH/lpa_frontier_sf1.json). Default off: the extra join and count
+    buy nothing on short fixed-k runs."""
     from pagerank_project_spark.operators.pagerank import build_vertices
     from pagerank_project_spark.operators.vids import assert_endpoints_covered
 
-    if vid_mode not in ("sorted", "hash"):
-        raise ValueError(f"unknown vid_mode {vid_mode!r}; one of ['sorted', 'hash']")
     if (edges is None) == (prepared_und is None):
         raise ValueError("pass exactly one of edges / prepared_und")
-    if prepared_und is not None and (vmap is not None or vid_mode == "hash"):
-        raise ValueError("prepared_und bakes the sorted vid map; "
-                         "vmap/vid_mode='hash' cannot be combined with it")
+    if prepared_und is not None and vmap is not None:
+        raise ValueError("prepared_und bakes the sorted vid map; vmap cannot be combined with it")
     import time as _time
 
     phases: dict = {}
@@ -194,10 +124,7 @@ def label_propagation(
         und = und.persist()
         und.count()
         phases["cache_fill"] = round(_time.time() - t_ph, 3)
-        return _run_loop(
-            spark, und, vmap, nparts, iterations, checkpoint_store, frontier,
-            frontier_threshold, phases, warm_start,
-        )
+        return _run_loop(spark, und, vmap, nparts, iterations, checkpoint_store, frontier, phases)
 
     nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     verts = build_vertices(edges, vertices)
@@ -207,39 +134,27 @@ def label_propagation(
         phases["validate"] = round(_time.time() - t_ph, 3)
     t_ph = _time.time()
 
-    hashed = False
-    if vid_mode == "hash" and vmap is None:
-        chk = verts.agg(
-            F.count("*").alias("n"), F.count_distinct(F.xxhash64("id")).alias("nv")
-        ).first()
-        if chk["nv"] == chk["n"]:  # no collision → inline encode, zero joins
-            hashed = True
-            vmap = verts.select("id", F.xxhash64("id").alias("vid"))
-            enc = edges.select(F.xxhash64("src").alias("src"), F.xxhash64("dst").alias("dst"))
-    if not hashed:
-        # one-time encoding with vids in STRING-sorted order so long-vid
-        # tie-breaks ≡ min-string tie-breaks (distributed; no global sort).
-        if vmap is None:
-            vmap = string_sorted_vids(verts, "id", nparts)
-        enc = (
-            edges.select("src", "dst")
-            .join(vmap.select(F.col("id").alias("src"), F.col("vid").alias("_s")), "src")
-            .join(vmap.select(F.col("id").alias("dst"), F.col("vid").alias("_t")), "dst")
-            .select(F.col("_s").alias("src"), F.col("_t").alias("dst"))
-        )
-    if not hashed:
-        # dense sorted vids are ranks 1..n — when n fits int32, narrow the
-        # edge pairs BEFORE the symmetrize: the distinct shuffle, the
-        # long-lived symmetric cache (the engine's largest per-superstep
-        # DRAM stream — the measured late-superstep bandwidth cap,
-        # BENCH/BASELINE.md) and the whole loop state then carry 4-byte
-        # vids. Order-preserving cast → labels bitwise equal (pinned by
-        # test); xxhash64 vids never narrow.
-        from pagerank_project_spark.operators.vids import INT_VID_LIMIT
+    # one-time encoding with vids in STRING-sorted order so long-vid
+    # tie-breaks ≡ min-string tie-breaks (distributed; no global sort).
+    if vmap is None:
+        vmap = string_sorted_vids(verts, "id", nparts)
+    enc = (
+        edges.select("src", "dst")
+        .join(vmap.select(F.col("id").alias("src"), F.col("vid").alias("_s")), "src")
+        .join(vmap.select(F.col("id").alias("dst"), F.col("vid").alias("_t")), "dst")
+        .select(F.col("_s").alias("src"), F.col("_t").alias("dst"))
+    )
+    # dense sorted vids are ranks 1..n — when n fits int32, narrow the
+    # edge pairs BEFORE the symmetrize: the distinct shuffle, the
+    # long-lived symmetric cache (the engine's largest per-superstep
+    # DRAM stream — the measured late-superstep bandwidth cap,
+    # BENCH/BASELINE.md) and the whole loop state then carry 4-byte
+    # vids. Order-preserving cast → labels bitwise equal (pinned by test).
+    from pagerank_project_spark.operators.vids import INT_VID_LIMIT
 
-        if (vmap.agg(F.max("vid")).first()[0] or 0) < INT_VID_LIMIT:
-            enc = enc.select(F.col("src").cast("int").alias("src"),
-                             F.col("dst").cast("int").alias("dst"))
+    if (vmap.agg(F.max("vid")).first()[0] or 0) < INT_VID_LIMIT:
+        enc = enc.select(F.col("src").cast("int").alias("src"),
+                         F.col("dst").cast("int").alias("dst"))
     # Symmetrize AFTER the encode, canonically, on LONG pairs (the CC
     # round-3 lesson): the old string-side undirected_edges() shuffled the
     # symmetrized multiset (2× the rows at ~5× the bytes) through its
@@ -259,40 +174,7 @@ def label_propagation(
     und = und.repartition(nparts, "src").persist()
     und.count()
     phases["cache_fill"] = round(_time.time() - t_ph, 3)
-    return _run_loop(
-        spark, und, vmap, nparts, iterations, checkpoint_store, frontier,
-        frontier_threshold, phases, warm_start,
-    )
-
-
-def _pilot_superstep(und: DataFrame, vmap: DataFrame, nparts: int) -> None:
-    """warm_start pilot: one throwaway superstep of the exact loop plan
-    shape over a 1%-sampled slice (see label_propagation docstring). The
-    result is discarded; nothing here feeds the loop."""
-    w = Window.partitionBy("vid").orderBy(F.desc("cnt"), F.asc("lbl"))
-    vid_t = und.schema["src"].dataType.simpleString()  # match the loop's codegen shapes
-    labels = (
-        vmap.select(F.col("vid").cast(vid_t).alias("vid"), F.col("vid").cast(vid_t).alias("lbl"))
-        .sample(fraction=0.01, seed=7)
-        .repartition(nparts, "vid")
-        .localCheckpoint(eager=False)
-    )
-    sund = und.sample(fraction=0.01, seed=7)
-    nbr = (
-        sund.join(
-            labels.select(F.col("vid").alias("_sv"), "lbl").hint("shuffle_hash"),
-            sund.src == F.col("_sv"),
-        )
-        .select(F.col("dst").alias("vid"), "lbl", F.lit(1).alias("c"))
-    )
-    keeper = labels.select("vid", "lbl", F.lit(0).alias("c"))
-    freq = nbr.unionByName(keeper).groupBy("vid", "lbl").agg(F.sum("c").alias("cnt"))
-    winner = (
-        freq.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("vid", "lbl")
-    )
-    winner.localCheckpoint(eager=False).count()
+    return _run_loop(spark, und, vmap, nparts, iterations, checkpoint_store, frontier, phases)
 
 
 def _run_loop(
@@ -303,9 +185,7 @@ def _run_loop(
     iterations: int,
     checkpoint_store,
     frontier: bool,
-    frontier_threshold: float,
     phases: dict,
-    warm_start: bool = False,
 ) -> LPAResult:
     # the label state carries the CACHE's vid dtype (int when the dense
     # sorted vids were narrowed, long otherwise) so every loop join/shuffle
@@ -332,86 +212,12 @@ def _run_loop(
     it = start_iter
     iter_secs: list[float] = []
     frontier_sizes: list[int] = []
-    n_verts = vmap.count() if frontier else 0
-    changed = None  # (vid) rows whose label changed last superstep; None = all/unknown
-    changed_count = n_verts
     try:
         import time
 
-        if warm_start:
-            t_ws = time.time()
-            _pilot_superstep(und, vmap, nparts)
-            labels.count()  # materialize the initial checkpoint pre-superstep-1
-            phases["warm_start"] = round(time.time() - t_ws, 3)
         w = Window.partitionBy("vid").orderBy(F.desc("cnt"), F.asc("lbl"))
         for it in range(start_iter + 1, iterations + 1):
             t_it = time.time()
-            if (
-                frontier
-                and changed is not None
-                and changed_count <= frontier_threshold * n_verts
-                and changed_count <= FRONTIER_BROADCAST_LIMIT
-            ):
-                # --- frontier superstep (exact; see docstring) -------------
-                touched = (
-                    und.join(
-                        changed.select(F.col("vid").alias("src")).hint("shuffle_hash"), "src"
-                    )
-                    .select(F.col("dst").alias("vid"))
-                    .distinct()
-                    .persist()
-                )
-                tc = touched.count()
-                if tc <= FRONTIER_BROADCAST_LIMIT:
-                    filt = und.join(
-                        F.broadcast(touched.select(F.col("vid").alias("dst"))), "dst", "semi"
-                    )
-                    # build side = the filtered Σ indeg(touched)-row edge set;
-                    # the vid-partitioned label state streams exchange-free
-                    nbr = (
-                        labels.select(F.col("vid").alias("_sv"), "lbl")
-                        .join(
-                            filt.select(F.col("src").alias("_sv"), "dst").hint("shuffle_hash"),
-                            "_sv",
-                        )
-                        .select(F.col("dst").alias("vid"), "lbl", F.lit(1).alias("c"))
-                    )
-                    # no keeper rows: touched vertices are non-isolated by
-                    # construction (they have the edge from the changed
-                    # neighbor), and a cnt-0 own-label row can never beat a
-                    # cnt>=1 neighbor row — identical winner either way
-                    freq = nbr.groupBy("vid", "lbl").agg(F.sum("c").alias("cnt"))
-                    winner = (
-                        freq.withColumn("_rn", F.row_number().over(w))
-                        .filter(F.col("_rn") == 1)
-                        .select("vid", "lbl")
-                    )
-                    new_aff = winner.join(
-                        labels.select("vid", F.col("lbl").alias("_old")).hint("shuffle_hash"),
-                        "vid",
-                    ).select("vid", "lbl", (F.col("lbl") != F.col("_old")).alias("chg"))
-                    carry = labels.join(
-                        F.broadcast(touched), "vid", "anti"
-                    ).select("vid", "lbl", F.lit(False).alias("chg"))
-                    labels = (
-                        new_aff.unionByName(carry)
-                        .repartition(nparts, "vid")
-                        .localCheckpoint(eager=False)
-                    )
-                    changed_count = labels.filter("chg").count()  # materializes
-                    changed = labels.filter("chg").select("vid")
-                    labels = labels.select("vid", "lbl")
-                    touched.unpersist()
-                    frontier_sizes.append(changed_count)
-                    iter_secs.append(round(time.time() - t_it, 3))
-                    if checkpoint_store is not None:
-                        checkpoint_store.write_iteration(
-                            _decode(labels, vmap), iteration=it, metrics={}
-                        )
-                    if changed_count == 0:
-                        break  # fixpoint: every further superstep is identity
-                    continue
-                touched.unpersist()  # too big to broadcast → full gather
             # shuffle_hash on the LABEL side (pagerank.py's superstep rule):
             # un-hinted, Catalyst either auto-broadcasts the checkpointed
             # |V|-row label vector (driver-serial HashedRelation build per
@@ -444,7 +250,7 @@ def _run_loop(
             )
             if frontier:
                 # both sides leave vid-partitioned operators → zero-exchange
-                # hash join; chg feeds the next superstep's frontier test
+                # hash join; the changed count drives the early stop
                 labels = winner.join(
                     labels.select("vid", F.col("lbl").alias("_old")).hint("shuffle_hash"),
                     "vid",
@@ -452,7 +258,6 @@ def _run_loop(
                     "vid", "lbl", (F.col("lbl") != F.col("_old")).alias("chg")
                 ).localCheckpoint(eager=False)
                 changed_count = labels.filter("chg").count()  # materializes
-                changed = labels.filter("chg").select("vid")
                 labels = labels.select("vid", "lbl")
                 frontier_sizes.append(changed_count)
             else:

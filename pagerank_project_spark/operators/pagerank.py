@@ -34,8 +34,8 @@ Scale notes (100 TB / 1000-executor design):
   high in-degree hub contributes one partial row per partition — skew-safe
   without salting; AQE skew-join handles the join side (see
   operators/superstep_csr.py for the explicitly salted CSR path).
-- lineage is truncated via localCheckpoint every ``local_checkpoint_every``
-  iterations (iterative-plan-growth failure mode, SURVEY.md §4).
+- lineage is truncated via localCheckpoint every superstep
+  (iterative-plan-growth failure mode, SURVEY.md §4).
 """
 
 from __future__ import annotations

@@ -125,16 +125,20 @@ def prepare_graph(
     return load_prepared(spark, path)
 
 
-def _catalog_entry_matches(spark: SparkSession, tbl: str, path: str, buckets: int) -> bool:
+def _catalog_entry_matches(
+    spark: SparkSession, tbl: str, path: str, buckets: int, vid_type: str
+) -> bool:
     """True iff the registered table's LOCATION resolves to {path}/edges and
-    its bucket count matches the manifest being loaded."""
+    its bucket count and src/dst column type (SQL name, e.g. ``BIGINT``)
+    match the manifest being loaded."""
     rows = spark.sql(f"DESCRIBE FORMATTED {tbl}").collect()
     meta = {r["col_name"].strip(): (r["data_type"] or "").strip() for r in rows}
     loc = meta.get("Location", "")
     want = os.path.abspath(f"{path}/edges")
     got = os.path.abspath(loc.removeprefix("file:"))
     n_buckets = meta.get("Num Buckets", "")
-    return got == want and n_buckets == str(buckets)
+    types_ok = all(meta.get(c, "").lower() == vid_type.lower() for c in ("src", "dst"))
+    return got == want and n_buckets == str(buckets) and types_ok
 
 
 def load_prepared(spark: SparkSession, path: str) -> PreparedGraph:
@@ -144,11 +148,14 @@ def load_prepared(spark: SparkSession, path: str) -> PreparedGraph:
         raise ValueError(f"prepared graph at {path} has version {manifest.get('version')}, "
                          f"this engine reads {PREPARED_VERSION}")
     tbl, buckets = manifest["table"], manifest["buckets"]
-    if spark.catalog.tableExists(tbl) and not _catalog_entry_matches(spark, tbl, path, buckets):
-        # the catalog holds a table with this name but a DIFFERENT location
-        # or bucket spec (a prepared dir was moved/copied and its original
-        # path re-prepared in the same session) — serving it would silently
-        # read the other dir's edge files with this manifest's n/m counts
+    if spark.catalog.tableExists(tbl) and not _catalog_entry_matches(
+        spark, tbl, path, buckets, "BIGINT"
+    ):
+        # the catalog holds a table with this name but a DIFFERENT location,
+        # bucket spec or column type (a prepared dir was moved/copied and its
+        # original path re-prepared in the same session) — serving it would
+        # silently read the other dir's edge files with this manifest's n/m
+        # counts
         spark.sql(f"DROP TABLE {tbl}")
     if not spark.catalog.tableExists(tbl):
         # fresh session: the in-memory catalog forgot the bucket spec —
@@ -288,7 +295,9 @@ def load_prepared_undirected(spark: SparkSession, path: str) -> PreparedUndirect
     dtype = manifest.get("dtype", "bigint")
     sql_t = "INT" if dtype == "int" else "BIGINT"
     sort_spec = "src, dst" if manifest.get("version", 1) >= 2 else "src"
-    if spark.catalog.tableExists(tbl) and not _catalog_entry_matches(spark, tbl, path, buckets):
+    if spark.catalog.tableExists(tbl) and not _catalog_entry_matches(
+        spark, tbl, path, buckets, sql_t
+    ):
         spark.sql(f"DROP TABLE {tbl}")
     if not spark.catalog.tableExists(tbl):
         spark.sql(

@@ -1,4 +1,5 @@
-"""Frontier-mode LPA: exact equality with the full gather + early stop."""
+"""LPA frontier=True (changed-label count + fixpoint early stop): labels
+equal the full fixed-K run."""
 
 from __future__ import annotations
 
@@ -21,9 +22,7 @@ def test_frontier_bitwise_equal_random_graphs(spark):
         edges = spark.createDataFrame(_random_edges(seed, 40, 120), "src string, dst string")
         for k in (3, 6):
             full = label_propagation(spark, edges, iterations=k)
-            fr = label_propagation(
-                spark, edges, iterations=k, frontier=True, frontier_threshold=1.0
-            )
+            fr = label_propagation(spark, edges, iterations=k, frontier=True)
             assert _labels(fr) == _labels(full)
 
 
@@ -38,9 +37,7 @@ def test_frontier_bitwise_equal_hub_and_isolated(spark):
         [(v,) for v in {x for p in edges for x in p} | {"lonely"}], "id string"
     )
     full = label_propagation(spark, e, vertices=verts, iterations=5)
-    fr = label_propagation(
-        spark, e, vertices=verts, iterations=5, frontier=True, frontier_threshold=1.0
-    )
+    fr = label_propagation(spark, e, vertices=verts, iterations=5, frontier=True)
     assert _labels(fr) == _labels(full)
     assert ("lonely", "lonely") in _labels(fr)
 
@@ -51,7 +48,7 @@ def test_frontier_early_stop_matches_full_run(spark):
     edges = [("a", "b"), ("b", "c"), ("c", "a"), ("x", "y"), ("y", "z"), ("z", "x")]
     e = spark.createDataFrame(edges, "src string, dst string")
     full = label_propagation(spark, e, iterations=10)
-    fr = label_propagation(spark, e, iterations=10, frontier=True, frontier_threshold=1.0)
+    fr = label_propagation(spark, e, iterations=10, frontier=True)
     assert _labels(fr) == _labels(full)
     assert fr.iterations < 10
     assert fr.frontier_sizes is not None and fr.frontier_sizes[-1] == 0
@@ -59,30 +56,21 @@ def test_frontier_early_stop_matches_full_run(spark):
 
 def test_frontier_sizes_shrink_to_zero(spark):
     edges = spark.createDataFrame(_random_edges(7, 30, 80), "src string, dst string")
-    fr = label_propagation(spark, edges, iterations=12, frontier=True, frontier_threshold=1.0)
+    fr = label_propagation(spark, edges, iterations=12, frontier=True)
     sizes = fr.frontier_sizes
     assert sizes is not None and len(sizes) >= 1
     # either it hit the fixpoint (last size 0) or ran all 12 (oscillation)
     assert sizes[-1] == 0 or len(sizes) == 12
 
 
-def test_frontier_threshold_zero_never_filters(spark):
-    """threshold 0 keeps every superstep on the full path — result and
-    iteration count identical to the default."""
-    edges = spark.createDataFrame(_random_edges(3, 25, 70), "src string, dst string")
-    full = label_propagation(spark, edges, iterations=4)
-    fr = label_propagation(spark, edges, iterations=4, frontier=True, frontier_threshold=0.0)
-    assert _labels(fr) == _labels(full)
-
-
-def test_cli_ppr_sample_and_frontier(capsys):
+def test_cli_ppr_sample_and_frontier(capsys, small_csv):
     """--algorithm ppr/sample and --lpa_frontier over the reference edge
     list: ppr prints per-seed ranked lines with the seed holding >= 1-alpha
-    restart mass, sample prints per-hop counts, frontier LPA reports its
-    shrinking changed sets."""
+    restart mass, sample prints per-hop counts, early-stop LPA reports its
+    per-superstep changed-label counts."""
     from pagerank_project_spark.cli import main
 
-    rc = main(["--data", "/root/reference/Data/small.csv.gz",
+    rc = main(["--data", small_csv,
                "--algorithm", "ppr", "--seeds_like", "4",
                "--power", "3", "--max_results", "3", "--cores", "4"])
     out = capsys.readouterr().out
@@ -90,14 +78,14 @@ def test_cli_ppr_sample_and_frontier(capsys):
     lines = [ln for ln in out.splitlines() if ln.startswith("seed=4")]
     assert lines and "rnk=1" in lines[0]
 
-    rc = main(["--data", "/root/reference/Data/small.csv.gz",
+    rc = main(["--data", small_csv,
                "--algorithm", "sample", "--seeds_like", "4",
                "--fanouts", "2,2", "--cores", "4"])
     out = capsys.readouterr().out
     assert rc == 0
     assert any(ln.startswith("hop=1 n_edges=") for ln in out.splitlines())
 
-    rc = main(["--data", "/root/reference/Data/small.csv.gz",
+    rc = main(["--data", small_csv,
                "--algorithm", "lpa", "--lpa_iterations", "8",
                "--lpa_frontier", "--cores", "4"])
     out = capsys.readouterr().out
@@ -133,4 +121,4 @@ def test_lpa_prepared_und_bitwise_equal_and_guards(spark, tmp_path):
     with _pytest.raises(ValueError, match="exactly one"):
         label_propagation(spark, iterations=2)
     with _pytest.raises(ValueError, match="bakes the sorted"):
-        label_propagation(spark, iterations=2, prepared_und=pg, vid_mode="hash")
+        label_propagation(spark, iterations=2, prepared_und=pg, vmap=pg.vmap)

@@ -616,18 +616,18 @@ def test_media_audio_profile_matches_numpy(spark, tmp_path):
         assert got[row["doc_id"]] == pytest.approx(exp, abs=1e-9)
 
 
-def test_cli_hits_and_kcore_small_graph(capsys):
+def test_cli_hits_and_kcore_small_graph(capsys, small_csv):
     """--algorithm hits/kcore over the reference edge list: hits prints
     top-auth lines, kcore converges with the expected core values."""
     from pagerank_project_spark.cli import main
 
-    rc = main(["--data", "/root/reference/Data/small.csv.gz",
+    rc = main(["--data", small_csv,
                "--algorithm", "hits", "--power", "3", "--max_results", "3", "--cores", "4"])
     out = capsys.readouterr().out
     assert rc == 0
     assert sum(ln.startswith("auth=") for ln in out.splitlines()) == 3
 
-    rc = main(["--data", "/root/reference/Data/small.csv.gz",
+    rc = main(["--data", small_csv,
                "--algorithm", "kcore", "--cores", "4"])
     out = capsys.readouterr().out
     assert rc == 0

@@ -41,15 +41,23 @@ def test_kcore_endpoint_guard_raises(spark):
 
 
 # --------------------------------------------------------------------------
-# CLI: --filter_ratio with --prepared_dir must error, not silently no-op
+# CLI: --filter_ratio with --prepared_dir, or with --prepare --algorithm lpa,
+# must error, not silently no-op
 # --------------------------------------------------------------------------
 
-def test_cli_prepared_with_filter_ratio_errors(spark, capsys):
+def test_cli_prepared_with_filter_ratio_errors(spark, capsys, small_csv, tmp_path):
     from pagerank_project_spark.cli import main
 
     rc = main(["--prepared_dir", "/nonexistent", "--filter_ratio", "0.3"])
     assert rc == 2
     assert "baked into the prepared graph" in capsys.readouterr().err
+
+    pdir = tmp_path / "pu"
+    rc = main(["--data", small_csv, "--algorithm", "lpa", "--prepare",
+               "--prepared_dir", str(pdir), "--filter_ratio", "0.3"])
+    assert rc == 2
+    assert "--prepare --algorithm lpa" in capsys.readouterr().err
+    assert not pdir.exists()
 
 
 # --------------------------------------------------------------------------
@@ -59,11 +67,14 @@ def test_cli_prepared_with_filter_ratio_errors(spark, capsys):
 def test_load_prepared_moved_dir_reregisters(spark, tmp_path):
     """A prepared dir copied elsewhere carries a manifest naming the
     ORIGINAL path's catalog table; loading the copy while the original's
-    table is registered must not serve the original's files."""
+    table is registered must not serve the original's files. Likewise an
+    entry whose column type differs from the manifest's is re-created."""
     from pagerank_project_spark.plans.prepared_graph import (
         _catalog_entry_matches,
         load_prepared,
+        load_prepared_undirected,
         prepare_graph,
+        prepare_undirected,
     )
 
     e = edges_df(spark, [("a", "b"), ("b", "c"), ("c", "a")])
@@ -75,11 +86,33 @@ def test_load_prepared_moved_dir_reregisters(spark, tmp_path):
     import json
 
     tbl = json.load(open(f"{b_dir}/manifest.json"))["table"]
-    assert _catalog_entry_matches(spark, tbl, b_dir, pg_b.buckets)
+    assert _catalog_entry_matches(spark, tbl, b_dir, pg_b.buckets, "BIGINT")
     assert pg_b.edges.count() == pg_a.m
     # and loading the original back re-points the entry at the original
     pg_a2 = load_prepared(spark, a_dir)
-    assert _catalog_entry_matches(spark, tbl, a_dir, pg_a2.buckets)
+    assert _catalog_entry_matches(spark, tbl, a_dir, pg_a2.buckets, "BIGINT")
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+    # a catalog entry at the SAME location and bucket count but with bigint
+    # columns (left by an earlier wide artifact) must not serve an int32
+    # artifact's files: the entry is dropped and re-created as INT
+    pdir = str(tmp_path / "und")
+    pg = prepare_undirected(spark, e, pdir, buckets=4)
+    manifest = json.load(open(f"{pdir}/manifest.json"))
+    assert manifest["dtype"] == "int"
+    tbl = manifest["table"]
+    spark.sql(f"DROP TABLE {tbl}")
+    spark.sql(
+        f"CREATE TABLE {tbl} (src BIGINT, dst BIGINT) USING PARQUET "
+        f"CLUSTERED BY (src) SORTED BY (src, dst) INTO {pg.buckets} BUCKETS "
+        f"LOCATION '{pdir}/edges'"
+    )
+    assert not _catalog_entry_matches(spark, tbl, pdir, pg.buckets, "INT")
+
+    pg2 = load_prepared_undirected(spark, pdir)
+    assert _catalog_entry_matches(spark, tbl, pdir, pg2.buckets, "INT")
+    assert pg2.und.schema["src"].dataType.simpleString() == "int"
+    assert pg2.und.count() == pg.m_und
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
@@ -257,52 +290,6 @@ def test_pii_scrub_known_counts(spark):
     r5 = got[5]
     assert (r5["n_email"], r5["n_key"], r5["n_ipv4"], r5["n_phone"]) == (0, 0, 0, 0)
     assert r5["redacted"] == "nothing to redact here 123 456"
-
-
-# --------------------------------------------------------------------------
-# LPA hash-vid production mode
-# --------------------------------------------------------------------------
-
-def test_lpa_hash_mode_deterministic_and_structurally_sane(spark):
-    """hash vid_mode: deterministic across partition counts, finds the
-    same community STRUCTURE as sorted mode on a tie-free fixture (two
-    4-cliques bridged by one edge), and falls back safely."""
-    from pagerank_project_spark.operators.labelprop import label_propagation
-
-    cliq = lambda names: [(a, b) for a in names for b in names if a < b]  # noqa: E731
-    rows = cliq(["a1", "a2", "a3", "a4"]) + cliq(["b1", "b2", "b3", "b4"]) + [("a1", "b1")]
-    e = edges_df(spark, rows)
-
-    def parts(res):
-        from collections import defaultdict
-
-        d = defaultdict(set)
-        for r in res.labels.collect():
-            d[r["label"]].add(r["id"])
-        return sorted(sorted(v) for v in d.values())
-
-    sorted_parts = parts(label_propagation(spark, e, iterations=4))
-    hash_parts = parts(label_propagation(spark, e, iterations=4, vid_mode="hash"))
-    assert sorted_parts == hash_parts  # two cliques, bridge absorbed
-
-    # determinism: partition count must not change hash-mode output
-    h2 = label_propagation(spark, e, iterations=4, vid_mode="hash", num_partitions=2)
-    h8 = label_propagation(spark, e, iterations=4, vid_mode="hash", num_partitions=8)
-    assert sorted(map(tuple, h2.labels.collect())) == sorted(map(tuple, h8.labels.collect()))
-
-
-def test_lpa_hash_mode_zero_encode_joins(spark):
-    """The hash path must not join a vmap to encode edges: the symmetric
-    edge view's plan contains no join at all."""
-    from pagerank_project_spark.operators.components import undirected_edges
-    from pyspark.sql import functions as F
-
-    e = edges_df(spark, [("a", "b"), ("b", "c")])
-    enc = undirected_edges(e).select(
-        F.xxhash64("src").alias("src"), F.xxhash64("dst").alias("dst")
-    )
-    plan = enc._jdf.queryExecution().optimizedPlan().toString()
-    assert "Join" not in plan
 
 
 # --------------------------------------------------------------------------

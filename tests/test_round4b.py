@@ -298,26 +298,26 @@ def test_bowtie_hop_cap_limits_regions(spark):
 # CLI surface for the round-4 algorithms
 # --------------------------------------------------------------------------
 
-def test_cli_bowtie_and_spam_small_graph(capsys):
+def test_cli_bowtie_and_spam_small_graph(capsys, small_csv):
     """--algorithm bowtie/spam over the reference edge list with seed url
     '1'; bowtie prints region counts, spam prints ranked mass lines, and
     both refuse to run without --seeds_like."""
     from pagerank_project_spark.cli import main
 
-    rc = main(["--data", "/root/reference/Data/small.csv.gz",
+    rc = main(["--data", small_csv,
                "--algorithm", "bowtie", "--seeds_like", "1", "--cores", "4"])
     out = capsys.readouterr().out
     assert rc == 0
     assert any(ln.startswith("region=") for ln in out.splitlines())
 
-    rc = main(["--data", "/root/reference/Data/small.csv.gz",
+    rc = main(["--data", small_csv,
                "--algorithm", "spam", "--seeds_like", "1",
                "--max_iterations", "5", "--max_results", "3", "--cores", "4"])
     out = capsys.readouterr().out
     assert rc == 0
     assert sum(ln.startswith("mass=") for ln in out.splitlines()) == 3
 
-    rc = main(["--data", "/root/reference/Data/small.csv.gz",
+    rc = main(["--data", small_csv,
                "--algorithm", "bfs", "--cores", "4"])
     assert rc == 2  # missing --seeds_like
 

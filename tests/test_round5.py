@@ -1,6 +1,6 @@
 """Round-5 regression tests: ADVICE items (SCC endpoint coverage,
-neighbor-sample string-id contract, LPA frontier default) + the SCC
-assigned-parts union fold + md5-deterministic LSH/ANN reformulations."""
+neighbor-sample string-id contract) + the SCC assigned-parts union fold +
+md5-deterministic LSH/ANN reformulations."""
 
 from __future__ import annotations
 
@@ -46,17 +46,6 @@ def test_sample_adjacency_rejects_non_string_ids(spark):
     e = spark.createDataFrame([(1, 2), (1, 3)], "src long, dst long")
     with pytest.raises(TypeError, match="string"):
         sample_adjacency(e, k=1)
-
-
-def test_lpa_frontier_default_threshold_is_early_stop_only():
-    """ADVICE r4 (low): frontier=True must default to the provably-identity
-    early stop ONLY (threshold 0.0) — the filtered gather measured 7-9x
-    slower in the sync-LPA churn regime an 0.05 default would engage."""
-    import inspect
-
-    from pagerank_project_spark.operators.labelprop import label_propagation
-
-    assert inspect.signature(label_propagation).parameters["frontier_threshold"].default == 0.0
 
 
 def test_minhash_signature_matches_duckdb(spark):
@@ -148,53 +137,6 @@ def test_ivf_det_centroids_recall_floor(spark):
     assert len(approx & exact) / len(exact) >= 0.5
 
 
-def test_lpa_warm_start_bitwise_equal_and_phased(spark):
-    # the pilot superstep is discarded work: labels must be bitwise the
-    # default path's on both the direct and the prepared entrypoints
-    import random
-
-    from pagerank_project_spark.operators.labelprop import label_propagation
-
-    rng = random.Random(11)
-    edges = spark.createDataFrame(
-        list({(f"v{rng.randrange(60)}", f"v{rng.randrange(60)}") for _ in range(200)}),
-        "src string, dst string",
-    )
-    base = label_propagation(spark, edges, iterations=5)
-    warm = label_propagation(spark, edges, iterations=5, warm_start=True)
-    assert {(r.id, r.label) for r in warm.labels.collect()} == {
-        (r.id, r.label) for r in base.labels.collect()
-    }
-    assert "warm_start" in warm.phase_secs and warm.phase_secs["warm_start"] >= 0
-    assert "warm_start" not in base.phase_secs
-
-
-def test_lpa_warm_start_prepared_bitwise_equal(spark, tmp_path):
-    import random
-
-    from pagerank_project_spark.operators.labelprop import label_propagation
-    from pagerank_project_spark.plans.prepared_graph import (
-        load_prepared_undirected,
-        prepare_undirected,
-    )
-
-    rng = random.Random(13)
-    edges = spark.createDataFrame(
-        list({(f"v{rng.randrange(50)}", f"v{rng.randrange(50)}") for _ in range(150)}),
-        "src string, dst string",
-    )
-    pdir = str(tmp_path / "pund")
-    prepare_undirected(spark, edges, pdir, buckets=4)
-    pg = load_prepared_undirected(spark, pdir)
-    base = label_propagation(spark, iterations=4, prepared_und=pg)
-    pg2 = load_prepared_undirected(spark, pdir)
-    warm = label_propagation(spark, iterations=4, prepared_und=pg2, warm_start=True)
-    assert {(r.id, r.label) for r in warm.labels.collect()} == {
-        (r.id, r.label) for r in base.labels.collect()
-    }
-    assert "warm_start" in warm.phase_secs
-
-
 def test_lpa_int_vid_narrowing_bitwise_and_schema(spark, tmp_path, monkeypatch):
     """Dense sorted vids < INT_VID_LIMIT narrow the symmetric cache and the
     loop state to int32 (operators/labelprop.py, plans/prepared_graph.py v2).
@@ -237,16 +179,15 @@ def test_lpa_int_vid_narrowing_bitwise_and_schema(spark, tmp_path, monkeypatch):
     assert dict(narrow.labels.dtypes) == {"id": "string", "label": "string"}
 
 
-def test_cli_lpa_prepare_and_run_from_artifact(spark, tmp_path, capsys):
+def test_cli_lpa_prepare_and_run_from_artifact(spark, tmp_path, capsys, small_csv):
     """Round-5 CLI surface: --algorithm lpa --prepare bakes the undirected
     artifact (slots-bucketing deployment rule), and --prepared_dir runs the
-    loop from it (with --lpa_warm_start) producing labels identical to the
-    direct --data run."""
+    loop from it producing labels identical to the direct --data run."""
     import json as _json
 
     from pagerank_project_spark.cli import main
 
-    data = "/root/reference/Data/small.csv.gz"
+    data = small_csv
     pdir = str(tmp_path / "pu")
     rc = main(["--data", data, "--algorithm", "lpa", "--prepare",
                "--prepared_dir", pdir, "--num_partitions", "4", "--cores", "4"])
@@ -257,7 +198,7 @@ def test_cli_lpa_prepare_and_run_from_artifact(spark, tmp_path, capsys):
 
     o_prep, o_direct = str(tmp_path / "o1"), str(tmp_path / "o2")
     assert main(["--prepared_dir", pdir, "--algorithm", "lpa", "--lpa_iterations", "4",
-                 "--lpa_warm_start", "--output", o_prep, "--cores", "4"]) == 0
+                 "--output", o_prep, "--cores", "4"]) == 0
     assert main(["--data", data, "--algorithm", "lpa", "--lpa_iterations", "4",
                  "--output", o_direct, "--cores", "4"]) == 0
     got = sorted(map(tuple, spark.read.parquet(o_prep).collect()))

@@ -23,9 +23,13 @@ import subprocess
 import sys
 import time
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BENCH_DIR = os.path.join(REPO, "BENCH")
+
 SCALE_SNIPPET = r"""
-import json, sys, time
-sys.path.insert(0, "/root/repo")
+import json, os, sys, time
+_repo = os.getcwd()  # run_scale starts this snippet in the repo root
+sys.path.insert(0, _repo)
 from pyspark.sql import SparkSession, functions as F
 from pagerank_project_spark.config import PageRankConfig
 from pagerank_project_spark.datagen import ensure_fixture
@@ -69,7 +73,7 @@ spark = (SparkSession.builder.master(f"local-cluster[{nexec},{cores_per},13312]"
          # executor-side python workers must import pagerank_project_spark
          # (the CSR path ships pandas-UDF closures); on a real cluster this
          # is the --py-files zip from tools/submit.sh
-         .config("spark.executorEnv.PYTHONPATH", "/root/repo")
+         .config("spark.executorEnv.PYTHONPATH", _repo)
          .getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 fix = ensure_fixture(sf)
@@ -232,12 +236,8 @@ elif op in ("lpa_prepared", "lpa_prepared_slots"):
     pg = load_prepared_undirected(spark, pdir)
     lpa_iters = 12
     t0 = time.time()
-    # warm_start: production-length runs amortize the pilot superstep —
-    # superstep 1 otherwise carries the parallelism-invariant JIT/codegen
-    # session tail (measured ~27-35 s on BOTH legs at sf16; BASELINE.md)
     res = label_propagation(spark, iterations=lpa_iters, prepared_und=pg,
-                            num_partitions=(tot if op == "lpa_prepared" else None),
-                            warm_start=True)
+                            num_partitions=(tot if op == "lpa_prepared" else None))
     t_dec = time.time()
     res.labels.select(F.count("*")).collect()
     decode_sec = round(time.time() - t_dec, 2)
@@ -249,27 +249,19 @@ elif op in ("lpa_prepared", "lpa_prepared_slots"):
                 "sec_per_iter": med, "phase_secs": res.phase_secs, "decode_sec": decode_sec,
                 "whole_run_eps": round(n_edges * lpa_iters / dt, 1),
                 "edges_per_sec_per_superstep": round(n_edges / med, 1)})
-elif op in ("lpa", "lpa_hash", "lpa_prod"):
+elif op in ("lpa", "lpa_prod"):
     from pagerank_project_spark.operators.labelprop import label_propagation
-    # 'lpa' = the ledger row: sorted vids (compact 0..n vids delta-compress
-    # in the symmetric edge cache — measured smaller cache AND faster
-    # superstep scans than incompressible xxhash64 vids; see BASELINE.md
-    # round-4 LPA analysis). 'lpa_hash' = the hash-encode diagnostic.
-    # 'lpa_prod' = production-length run (12 supersteps) amortizing the
-    # one-time cache-fill/validate tails, sorted vids.
+    # 'lpa' = the ledger row (4 supersteps). 'lpa_prod' = production-length
+    # run (12 supersteps) amortizing the one-time cache-fill/validate tails.
     lpa_iters = 12 if op == "lpa_prod" else 4
-    lpa_mode = "hash" if op == "lpa_hash" else "sorted"
-    # production-length runs amortize the warm_start pilot (see the
-    # lpa_prepared cells); the 4-superstep ledger row stays pilot-free
-    res = label_propagation(spark, edges, vertices=verts, iterations=lpa_iters,
-                            vid_mode=lpa_mode, warm_start=(op == "lpa_prod"))
+    res = label_propagation(spark, edges, vertices=verts, iterations=lpa_iters)
     t_dec = time.time()
     res.labels.select(F.count("*")).collect()
     decode_sec = round(time.time() - t_dec, 2)
     dt = time.time() - t0
     steady = sorted(res.iter_secs[1:]) or res.iter_secs
     med = steady[len(steady) // 2]
-    out.update({"iters": lpa_iters, "vid_mode": lpa_mode, "wall_sec": round(dt, 2),
+    out.update({"iters": lpa_iters, "wall_sec": round(dt, 2),
                 "iter_secs": res.iter_secs,
                 "sec_per_iter": med, "phase_secs": res.phase_secs, "decode_sec": decode_sec,
                 "whole_run_eps": round(n_edges * lpa_iters / dt, 1),
@@ -331,7 +323,7 @@ def run_scale(sf: float, nexec: int, iters: int, op: str, retries: int = 2,
         out = subprocess.run(
             [sys.executable, "-c", SCALE_SNIPPET, str(sf), str(nexec), str(iters), op,
              str(cc_pin), str(prepared_buckets)],
-            capture_output=True, text=True, cwd="/root/repo", timeout=5400,
+            capture_output=True, text=True, cwd=REPO, timeout=5400,
         )
         lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
         if lines:
@@ -346,7 +338,7 @@ def run_scale(sf: float, nexec: int, iters: int, op: str, retries: int = 2,
 def run_bench(cpus: int, sf_dir: str) -> dict:
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus), SPARK_GRAFT_SF_DIR=sf_dir)
     out = subprocess.run([sys.executable, "bench.py"], env=env, capture_output=True,
-                         text=True, cwd="/root/repo", timeout=3600)
+                         text=True, cwd=REPO, timeout=3600)
     lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
     if not lines:
         raise RuntimeError(f"bench failed (cpus={cpus}): {out.stderr[-2000:]}")
@@ -389,8 +381,8 @@ def main():
     # merge with prior runs: CC is benched at a different sf than PR/LPA
     # (amortization point differs), so the md/json compose across invocations
     scale: dict[tuple, dict] = {}
-    if os.path.exists("/root/repo/BENCH/scaling.json"):
-        with open("/root/repo/BENCH/scaling.json") as f:
+    if os.path.exists(f"{BENCH_DIR}/scaling.json"):
+        with open(f"{BENCH_DIR}/scaling.json") as f:
             for k, v in json.load(f).items():
                 op_k, nexec_k = k.rsplit("_", 1)
                 scale[(op_k, int(nexec_k))] = v
@@ -405,7 +397,7 @@ def main():
             # checkpoint the merged rows after EVERY leg: a leg is tens of
             # minutes of wall, and a crash anywhere later in main() (e.g. a
             # KeyError in a report f-string) must not lose measured data
-            with open("/root/repo/BENCH/scaling.json", "w") as f:
+            with open(f"{BENCH_DIR}/scaling.json", "w") as f:
                 json.dump({f"{k[0]}_{k[1]}": v for k, v in scale.items()}, f, indent=2)
             rate = r.get("edges_per_sec_per_superstep", r.get("whole_run_eps", 0.0))
             print(f"{op} {nexec}x4 executors: {rate:,.0f} edges/s"
@@ -418,8 +410,8 @@ def main():
         # its table (they are refreshed by full runs / the round driver)
         bench = None
         try:
-            with open("/root/repo/BENCH/local8.json") as f8, open(
-                "/root/repo/BENCH/local32.json"
+            with open(f"{BENCH_DIR}/local8.json") as f8, open(
+                f"{BENCH_DIR}/local32.json"
             ) as f32:
                 bench = {8: json.load(f8), 32: json.load(f32)}
         except OSError:
@@ -439,7 +431,7 @@ def main():
             return f"{b['whole_run_eps'] / (4 * a['whole_run_eps']):.2f}"
         return "—"
 
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(BENCH_DIR, exist_ok=True)
     rows = "\n".join(
         f"| {OP_LABEL[op]} | {scale[(op, 1)]['sf']:g} | {scale[(op, 1)]['n_edges']:,} "
         f"| {scale[(op, 1)]['edges_per_sec_per_superstep']:,.0f} "
@@ -498,7 +490,7 @@ def main():
 Per-query seconds (local[32]): {json.dumps(b32["queries"])}
 """
 
-    with open("/root/repo/BENCH/BASELINE.md", "w") as f:
+    with open(f"{BENCH_DIR}/BASELINE.md", "w") as f:
         f.write(f"""# BENCH — measured engine numbers (this sandbox)
 
 ## Scaling evidence (north_rule: N vs 4N executors, target efficiency ≥0.8)
@@ -593,8 +585,8 @@ round), LPA streams ONE long-lived 131M-row symmetric cache every
 superstep, and the vid encoding sets that cache's compressibility —
 compact string-sorted vids delta-compress, random xxhash64 vids don't,
 so hash mode paid a bigger cache (slower fill AND ~20% slower superstep
-scans: 103 vs 82 s/iter at 1×4) to save a 35 s encode. Sorted stays the
-default; vid_mode='hash' remains for encode-dominated shapes.
+scans: 103 vs 82 s/iter at 1×4) to save a 35 s encode. Sorted vids are
+now LPA's only encoding: the hash mode was removed (CC keeps its hash vids).
 (b) CANONICAL LONG-PAIR SYMMETRIZE — the old flow shuffled the
 symmetrized STRING multiset through its distinct before vids existed;
 encoding first and deduping greatest/least LONG pairs (canon ∪ reverse
@@ -620,9 +612,9 @@ changed-neighbor gather (broadcast semi-join filter over the cache,
 untouched vertices carry labels) was built, pinned bitwise-equal, and
 A/B'd at sf1/12 supersteps: with sync-LPA churn stalled at ~2% the
 filtered path ran 7-9 s/superstep vs 1.1 s full — two cache streams
-plus the state carry outweigh the skipped gather — so it ships default
-OFF, scoped to run-to-convergence jobs where its provably-identity
-fixpoint EARLY STOP (not the filter) is the win.
+plus the state carry outweigh the skipped gather — so the filtered
+gather was removed; frontier=True keeps only the provably-identity
+fixpoint EARLY STOP over the full gather, for run-to-convergence jobs.
 
 PREPARED UNDIRECTED LPA (round 5 — rows lpa_prepared64_* /
 lpa_prepared_* / lpa_prepared_slots_* in scaling.json; 12 supersteps,
@@ -796,12 +788,12 @@ sf32, verified leg-to-leg).
 Raw JSON: BENCH/scaling.json, BENCH/scaling_cc_sf16_pin1M.json,
 BENCH/arrow_sweep.json, BENCH/local8.json, BENCH/local32.json.
 """)
-    with open("/root/repo/BENCH/scaling.json", "w") as f:
+    with open(f"{BENCH_DIR}/scaling.json", "w") as f:
         json.dump({f"{k[0]}_{k[1]}": v for k, v in scale.items()}, f, indent=2)
     if bench:
-        with open("/root/repo/BENCH/local8.json", "w") as f:
+        with open(f"{BENCH_DIR}/local8.json", "w") as f:
             json.dump(bench[8], f, indent=2)
-        with open("/root/repo/BENCH/local32.json", "w") as f:
+        with open(f"{BENCH_DIR}/local32.json", "w") as f:
             json.dump(bench[32], f, indent=2)
     print("efficiency: " + " ".join(f"{op}={eff(op):.2f}" for op in all_ops) + " → BENCH/BASELINE.md")
 

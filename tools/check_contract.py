@@ -7,13 +7,15 @@ Usage: python tools/check_contract.py [sf_dir] [name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -33,8 +35,6 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
-
-    import os
 
     base = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace("sf", "")
     os.environ.setdefault("SPARK_GRAFT_ORACLE_SF", base)  # align code_* oracles

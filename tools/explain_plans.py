@@ -7,9 +7,11 @@ Usage: python tools/explain_plans.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import Window, functions as F  # noqa: E402
 
@@ -418,7 +420,7 @@ exists anywhere in the plan.""",
         fmt(lp_winner),
     ))
 
-    with open("/root/repo/docs/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "docs", "PLANS.md"), "w") as f:
         f.write(
             "# Physical plans of the hot paths (generated by tools/explain_plans.py)\n\n"
             "Captured on local[8], AQE off (loop configuration). Regenerate after\n"

@@ -15,8 +15,9 @@ trusted only when both legs' probes agree within ~25%. Run standalone:
 
     python tools/membw.py            # one JSON line
 
-The probe streams a 200 MB float64 array per worker (far over L3, so
-it measures DRAM, not cache) at 1/4/16-way and reports aggregate GB/s.
+The probe fills, then streams, a 200 MB float64 array per worker (far
+over L3, so it measures DRAM, not cache) at 1/4/16-way and reports
+aggregate GB/s.
 ~20 s total.
 """
 from __future__ import annotations
@@ -29,7 +30,9 @@ import time
 def _stream(_):
     import numpy as np
 
-    a = np.zeros(200_000_000 // 8, dtype=np.float64)  # 200 MB >> L3
+    # fill before timing: an untouched np.zeros array maps every page to the
+    # kernel's shared zero page, so summing it reads cache, not DRAM
+    a = np.ones(200_000_000 // 8, dtype=np.float64)  # 200 MB >> L3
     t0 = time.time()
     s = 0.0
     for _ in range(8):
